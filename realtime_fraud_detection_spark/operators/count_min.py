@@ -120,13 +120,14 @@ def cm_partials(
         group = [*keys, *(["hour"] if ts_col is not None else []), "depth", "col"]
         return exploded.groupBy(*group).agg(F.sum("cnt").alias("cnt"))
     item = F.col(item_col)
-    depths, col = _depth_coords(item, depth, width)
+    # the item rides under a reserved name: item_col may also be a key
+    depths, col = _depth_coords(F.col("_cm_item"), depth, width)
     cols = [*keys]
     if ts_col is not None:
         cols.append(F.date_trunc(grain, F.col(ts_col)).alias("hour"))
     exploded = (
         df.filter(item.isNotNull())
-        .select(*cols, depths.alias("_cm_depth"), F.col(item_col))
+        .select(*cols, depths.alias("_cm_depth"), item.alias("_cm_item"))
         .select(*keys,
                 *(["hour"] if ts_col is not None else []),
                 F.col("_cm_depth").alias("depth"),

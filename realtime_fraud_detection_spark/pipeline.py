@@ -25,28 +25,35 @@ from .functions import features as FF
 from .functions import scoring as S
 
 
+# profile column -> its name on the enriched row: the columns enrich reads
+USER_PROFILE = {
+    "created_at": "u_created_at",
+    "kyc_status": "u_kyc_status",
+    "risk_score": "u_risk_score",
+    "avg_transaction_amount": "u_avg_amount",
+    "device_fingerprints": "u_device_fps",
+    "preferred_time_start": "u_pref_start",
+    "preferred_time_end": "u_pref_end",
+}
+MERCHANT_PROFILE = {
+    "name": "m_name",
+    "category": "m_category",
+    "risk_level": "m_risk_level",
+    "avg_transaction_amount": "m_avg_amount",
+    "fraud_rate": "m_fraud_rate",
+    "is_blacklisted": "m_is_blacklisted",
+    "operating_hours": "m_hours",
+}
+
+
 def enrich(tx: DataFrame, users: DataFrame, merchants: DataFrame) -> DataFrame:
     """J5 — profile enrichment with missing-profile defaults
     (TransactionProcessor.java:489-508: risk 0.5/medium, fraud_rate 0.05)."""
     u = F.broadcast(users.select(
-        "user_id",
-        F.col("created_at").alias("u_created_at"),
-        F.col("kyc_status").alias("u_kyc_status"),
-        F.col("risk_score").alias("u_risk_score"),
-        F.col("avg_transaction_amount").alias("u_avg_amount"),
-        F.col("device_fingerprints").alias("u_device_fps"),
-        F.col("preferred_time_start").alias("u_pref_start"),
-        F.col("preferred_time_end").alias("u_pref_end"),
+        "user_id", *[F.col(c).alias(a) for c, a in USER_PROFILE.items()]
     ))
     m = F.broadcast(merchants.select(
-        "merchant_id",
-        F.col("name").alias("m_name"),
-        F.col("category").alias("m_category"),
-        F.col("risk_level").alias("m_risk_level"),
-        F.col("avg_transaction_amount").alias("m_avg_amount"),
-        F.col("fraud_rate").alias("m_fraud_rate"),
-        F.col("is_blacklisted").alias("m_is_blacklisted"),
-        F.col("operating_hours").alias("m_hours"),
+        "merchant_id", *[F.col(c).alias(a) for c, a in MERCHANT_PROFILE.items()]
     ))
     out = tx.join(u, "user_id", "left").join(m, "merchant_id", "left")
     return (

@@ -11,9 +11,11 @@ only streaming-specific lines are withWatermark and the sink wiring.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
 from .. import pipeline as P
 from ..operators import aggregations as A
@@ -27,6 +29,43 @@ def file_transaction_stream(spark: SparkSession, path: str, schema) -> DataFrame
     return spark.readStream.schema(schema).parquet(path)
 
 
+class _ReleaseOnTermination(StreamingQueryListener):
+    """Unpersists one query run's cached frames when that run terminates,
+    then deregisters itself. Registered before the query starts, so a run
+    that ends before its id is known here is caught by :meth:`watch`."""
+
+    def __init__(self, spark: SparkSession, frames: list[DataFrame]) -> None:
+        self._spark, self._frames, self._run_id = spark, frames, None
+        self._lock = threading.Lock()
+        spark.streams.addListener(self)
+
+    def watch(self, query: StreamingQuery) -> None:
+        self._run_id = str(query.runId)
+        if not query.isActive:  # state flips before the event is posted
+            self.release()
+
+    def release(self) -> None:
+        with self._lock:
+            frames, self._frames = self._frames, []
+        for f in frames:
+            f.unpersist()
+        if frames:
+            self._spark.streams.removeListener(self)
+
+    def onQueryStarted(self, event) -> None:  # noqa: N802
+        pass
+
+    def onQueryProgress(self, event) -> None:  # noqa: N802
+        pass
+
+    def onQueryIdle(self, event) -> None:  # noqa: N802
+        pass
+
+    def onQueryTerminated(self, event) -> None:  # noqa: N802
+        if str(event.runId) == self._run_id:
+            self.release()
+
+
 def run_scoring_pipeline(
     tx_stream: DataFrame,
     users: DataFrame,
@@ -37,15 +76,32 @@ def run_scoring_pipeline(
 ) -> StreamingQuery:
     """The main job (FraudDetectionJob.java:33-107): enrich → features →
     score → 4-sink fan-out, exactly-once to the sink tables via
-    checkpointed foreachBatch."""
-    scored = P.score_transactions(with_watermark(tx_stream, "pipeline"), users, merchants)
+    checkpointed foreachBatch.
+
+    Profiles are a per-query snapshot: the profile columns `enrich` reads
+    are persisted once, on the query's first micro-batch, and every batch
+    broadcasts from that cache instead of re-scanning and re-converting
+    `users` and `merchants`. The cache is released when the query
+    terminates; a profile change reaches the stream at its next start."""
+    profiles = [
+        users.select("user_id", *P.USER_PROFILE).persist(),
+        merchants.select("merchant_id", *P.MERCHANT_PROFILE).persist(),
+    ]
+    release = _ReleaseOnTermination(tx_stream.sparkSession, profiles)
+    scored = P.score_transactions(with_watermark(tx_stream, "pipeline"), *profiles)
     writer = (
         scored.writeStream.outputMode("append")
         .foreachBatch(multi_sink_writer(out_dir))
         .option("checkpointLocation", checkpoint)
     )
     writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    try:
+        query = writer.start()
+    except Exception:
+        release.release()
+        raise
+    release.watch(query)
+    return query
 
 
 def velocity_stream(tx_stream: DataFrame) -> DataFrame:

@@ -6,14 +6,15 @@ The reference runs four independent sinks off the processed stream
 (RedisTransactionSink.java:74-81). Here a single foreachBatch persists the
 scored micro-batch once and writes all projections from it.
 
-Replay semantics: each sink partitions by batch_id and writes with DYNAMIC
-partition overwrite, so a batch replayed after a mid-fan-out crash replaces
-exactly its own partition in each sink instead of appending duplicates —
-end-to-end the sinks hold each batch's rows exactly once. (The window where
-a crash leaves SOME sinks with the new batch and others without lasts until
-the replay; readers that must never observe it should read a single sink or
-gate on the checkpoint's committed batch id. Transactional cross-table
-visibility is what Delta/Iceberg add in production.)
+Replay semantics: each sink writes batch N as a plain overwrite of its own
+directory ``<sink>/batch_id=N`` (readers discover batch_id from the names),
+so a replayed batch replaces exactly its own directory in each sink — the
+sinks hold each batch's rows exactly once. A crash between the overwrite's
+delete and its commit can leave one batch's directory briefly absent, never
+doubled, and the replay restores it; likewise SOME sinks may hold the new
+batch and others not until the replay. Readers that must never observe that
+should read a single sink or gate on the checkpoint's committed batch id
+(transactional cross-table visibility is what Delta/Iceberg add).
 """
 
 from __future__ import annotations
@@ -63,15 +64,12 @@ def _read_store(spark, path: str) -> DataFrame | None:
 
 
 def _write_batch_partition(df: DataFrame, batch_id: int, path: str) -> None:
-    """Write one batch as partition batch_id=N, replacing that partition if
-    it already exists (idempotent replay) and leaving every other batch's
-    partition untouched (dynamic, not static, overwrite)."""
-    (
-        df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
+    """Overwrite ``<path>/batch_id=N`` with one batch: a replay leaves
+    nothing of an earlier attempt, and no other batch's directory is
+    touched. An incoming ``batch_id`` column is dropped — the directory
+    name carries the caller's id."""
+    df.drop("batch_id").write.mode("overwrite").parquet(
+        os.path.join(path, f"batch_id={batch_id}")
     )
 
 
@@ -87,11 +85,10 @@ def multi_sink_writer(out_dir: str) -> Callable[[DataFrame, int], None]:
     most of the per-batch fixed cost at small batch sizes
     (tools/bench_streaming.py). The batch materializes ONCE before the
     threads start — concurrent first actions on a cold cache would each
-    recompute the parse→score pipeline. Replay semantics are unchanged:
-    each write is an idempotent dynamic partition overwrite, and ordering
-    across sinks was never part of the contract (the mid-fan-out crash
-    window documented above exists either way; any subset of sinks may
-    now hold the new batch until the replay)."""
+    recompute the parse→score pipeline. Replay is the module's batch
+    directory overwrite: after a replay of batch N each sink holds exactly
+    what the replay wrote, zero rows included, and any subset of sinks may
+    hold the new batch until the replay."""
     from concurrent.futures import ThreadPoolExecutor, as_completed
 
     def write(batch: DataFrame, batch_id: int) -> None:
@@ -161,7 +158,7 @@ def compact_sink_batches(
     partitions are deleted — concurrent appends are never lost. Pass the
     checkpoint's last committed batch id as ``max_batch_id``: a batch the
     stream could still replay must keep its own partition (replay
-    idempotency is the per-batch dynamic overwrite), while a committed
+    idempotency is the per-batch directory overwrite), while a committed
     batch is never replayed and may be folded. Prior compaction outputs
     (negative ids) are re-consumed, so repeated compactions converge to
     one generation.
@@ -263,8 +260,8 @@ def incremental_dedup_writer(
     bands to the index. The batch's band table is computed ONCE
     (localCheckpoint) for both the probe and the append.
 
-    Replay semantics match the other sinks: both writes are dynamic
-    partition overwrites keyed by batch_id, and the index probe EXCLUDES
+    Replay semantics match the other sinks: both writes overwrite the
+    batch's own batch_id directory, and the index probe EXCLUDES
     the current batch_id — so a batch replayed after a mid-write crash
     replaces exactly its own partitions and never matches itself against
     the bands its failed attempt already appended.
@@ -329,7 +326,7 @@ def sketch_partial_writer(out_dir: str) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink for streaming distinct-user rollups at scale:
     each micro-batch appends its per-hour HLL partials (fixed-size
     DataSketches blobs) under its own batch_id partition — idempotent
-    replay by dynamic partition overwrite, the same contract as
+    replay by batch-directory overwrite, the same contract as
     `multi_sink_writer`. Downstream, `sketch_rollup_view` unions the
     stored partials; the events themselves are never rescanned, and the
     per-batch state that crosses the sink boundary is sketch-sized, not
@@ -366,7 +363,7 @@ def quantile_partial_writer(
     """foreachBatch sink for streaming percentile rollups — the quantile
     dual of `sketch_partial_writer`: each micro-batch lands its DDSketch
     bucket counts (operators/quantile_sketch.py) under its own batch_id
-    partition (idempotent replay by dynamic partition overwrite).
+    partition (idempotent replay by batch-directory overwrite).
     Per-batch state crossing the sink boundary is bucket-granular counts
     — bounded by groups × log_γ(max/min), never by row count."""
     path = os.path.join(out_dir, "quantile_partials")
@@ -497,7 +494,7 @@ def cm_partial_writer(
     """foreachBatch sink for streaming point-frequency rollups — the
     Count-Min dual of `frequent_items_writer`: each micro-batch lands its
     d×w counter partials (operators/count_min.py) under its own batch_id
-    partition (idempotent replay by dynamic partition overwrite). Unlike
+    partition (idempotent replay by batch-directory overwrite). Unlike
     MG compression, CM merging is LOSSLESS across batch boundaries —
     counters on the same (depth, col) grid just add — so the streamed
     store is bit-identical to a batch build at every grain, and the error
@@ -559,8 +556,8 @@ def eval_partial_writer(
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink for streaming model-evaluation rollups: each
     micro-batch lands its grouped (keys…, score) → (#pos, #neg) counts
-    under its own batch_id partition (idempotent replay by dynamic
-    partition overwrite). Per-score pos/neg counts merge LOSSLESSLY —
+    under its own batch_id partition (idempotent replay by
+    batch-directory overwrite). Per-score pos/neg counts merge LOSSLESSLY —
     they just add — so `eval_rollup_view` computes the SAME ROC-AUC / KS /
     AP a batch pass over the union would, bit-exactly (the reference only
     tracks rolling accuracy counters, model_manager.py performance
@@ -697,7 +694,7 @@ def search_index_writer(
     """foreachBatch sink maintaining a full-text search index INCREMENTALLY:
     each micro-batch tokenizes ONLY ITS OWN documents into doc-term rows
     (operators/corpus.doc_term_table) and lands them under its own batch_id
-    partition (idempotent replay by dynamic partition overwrite). The
+    partition (idempotent replay by batch-directory overwrite). The
     already-indexed corpus is never re-tokenized and never reshuffled —
     the same never-touch-the-old-corpus shape as
     `minhash_lsh_candidates_incremental`, applied to retrieval: at 100 TB
@@ -747,7 +744,7 @@ def contract_gated_writer(
     persists the per-rule violation counts under `summary/` — the same
     lossless split-and-audit policy as the corrupt-record readers,
     applied to semantic invariants instead of parse failures. All three
-    writes are dynamic partition overwrites keyed by batch_id (replay
+    writes overwrite the batch's own batch_id directory (replay
     rewrites its own partitions; the other batches are untouched).
 
     `rules_factory` is a zero-arg callable returning the name→Column rule
@@ -826,8 +823,8 @@ def quality_gated_ingest_writer(
     re-run over the accumulated store (the incremental LSH probe in
     :func:`incremental_dedup_writer` is the streaming near-dup half).
 
-    Replay: all three writes are dynamic partition overwrites keyed by
-    batch_id, and the fingerprint probe excludes the current batch_id —
+    Replay: all three writes overwrite the batch's own batch_id
+    directory, and the fingerprint probe excludes the current batch_id —
     identical crash/replay semantics to the other sinks in this module.
     """
     from ..functions.text import fingerprint
@@ -923,8 +920,8 @@ def budget_admission_writer(
     total overshoot is < one max document per group for the stream's
     lifetime, the same minimal-prefix law as the batch form.
 
-    Replay: both writes are dynamic partition overwrites keyed by
-    batch_id and the tally read excludes the current batch_id — replaying
+    Replay: both writes overwrite the batch's own batch_id directory
+    and the tally read excludes the current batch_id — replaying
     a batch recomputes the same remaining budgets and the same admission
     (module replay contract).
     """
@@ -1127,7 +1124,7 @@ def jdbc_exactly_once_writer(
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function for a replay-idempotent RELATIONAL sink (the
     reference's S10 store fed from the stream): the module's
-    dynamic-partition-overwrite contract translated to SQL. Per batch,
+    batch-directory-overwrite contract translated to SQL. Per batch,
     one driver-side `DELETE WHERE batch_id = N` (a no-op on the first
     write of N; on replay or after a half-written crash it clears
     whatever landed), then the batch appends tagged with its batch_id —
@@ -1273,8 +1270,8 @@ def embedding_ingest_writer(
        norm-hoisting rule);
     3. append the batch's (vector, cell, norm) rows to the store.
 
-    Replay semantics match the module contract: both writes are dynamic
-    partition overwrites keyed by batch_id and the probe excludes the
+    Replay semantics match the module contract: both writes overwrite
+    the batch's own batch_id directory and the probe excludes the
     current batch_id. Like IVF ANN, recall is bounded by cell
     assignment — two near-identical vectors land in the same cell unless
     they straddle a cell boundary (the composition recall the ANN tests

@@ -65,3 +65,32 @@ def test_frequent_items_partials_from_counts_bit_identical(spark):
         ev, "ts", "user_id", capacity=4, counts=_counts(ev)
     )
     assert _sorted_rows(raw) == _sorted_rows(shared)
+
+
+def test_cm_partials_item_also_a_key(spark):
+    """An item column that is also a key column must not emit a duplicate
+    column: the result equals the build keyed on a copy of the item."""
+    from realtime_fraud_detection_spark.operators.count_min import cm_partials
+
+    ev = _events(spark)
+    got = cm_partials(ev, "user_id", ts_col="ts", key_cols=["user_id"])
+    want = cm_partials(
+        ev.withColumn("k", F.col("user_id")), "user_id", ts_col="ts", key_cols=["k"]
+    ).withColumnRenamed("k", "user_id")
+    assert got.columns == want.columns
+    assert _sorted_rows(got) == _sorted_rows(want)
+
+
+def test_frequent_items_partials_from_counts_honours_grain(spark):
+    """Hour-grain counts fed to a day-grain build give day partials, the
+    same as the raw-event day build."""
+    from realtime_fraud_detection_spark.operators.heavy_hitters import (
+        frequent_items_partials,
+    )
+
+    ev = _events(spark)
+    raw = frequent_items_partials(ev, "ts", "user_id", capacity=4, grain="day")
+    shared = frequent_items_partials(
+        ev, "ts", "user_id", capacity=4, grain="day", counts=_counts(ev)
+    )
+    assert _sorted_rows(raw) == _sorted_rows(shared)

@@ -3,8 +3,10 @@
 A mid-fan-out crash replays the whole batch (Structured Streaming commits
 the checkpoint only after foreachBatch returns), so each sink must converge
 — not append — when the same (batch, batch_id) is written twice. The sinks
-do this by overwriting the batch's own partition (dynamic partition
-overwrite on batch_id).
+do this by a plain overwrite of the batch's own directory
+``<sink>/batch_id=N``. A crash between that overwrite's delete and its
+commit can leave one batch's directory briefly absent, but never doubled,
+and the replay restores it.
 """
 
 from __future__ import annotations
@@ -209,3 +211,66 @@ def test_compaction_on_missing_or_empty_sink_is_noop(spark, tmp_path):
     assert compact_sink_batches(spark, out, "transaction_enriched") == 0
     os.makedirs(os.path.join(out, "transaction_enriched"))
     assert compact_sink_batches(spark, out, "transaction_enriched") == 0
+
+
+def _files(path):
+    """{relative file: mtime_ns} under one directory."""
+    return {
+        os.path.relpath(os.path.join(root, f), path): os.stat(os.path.join(root, f)).st_mtime_ns
+        for root, _, fs in os.walk(path)
+        for f in fs
+    }
+
+
+def test_incoming_batch_id_column_is_written_under_callers_id(spark, tmp_path):
+    from realtime_fraud_detection_spark.streaming.sinks import _write_batch_partition
+
+    path = str(tmp_path / "store")
+    df = spark.createDataFrame([(1, 7), (2, 7)], "x int, batch_id long")
+    _write_batch_partition(df, 3, path)
+    assert sorted(d for d in os.listdir(path) if not d.startswith(".")) == ["batch_id=3"]
+    got = spark.read.parquet(path)
+    assert sorted(got.columns) == ["batch_id", "x"]
+    assert {r["batch_id"] for r in got.collect()} == {3}
+    # the files themselves do not carry the column
+    assert spark.read.parquet(os.path.join(path, "batch_id=3")).columns == ["x"]
+
+
+def test_replay_yielding_no_rows_leaves_no_stale_rows(spark, fraud_data, tmp_path):
+    """The first attempt of batch 0 wrote alerts; its replay yields none
+    for that sink. The sink must then hold no batch-0 alerts."""
+    out = str(tmp_path / "out")
+    write = multi_sink_writer(out)
+    batch = _scored(fraud_data)
+    alerts = os.path.join(out, "fraud_alerts")
+
+    write(batch, 0)
+    assert spark.read.parquet(alerts).count() > 0
+    quiet = batch.filter(F.col("model_score") <= 0.7)
+    write(quiet, 0)
+    assert spark.read.parquet(alerts).count() == 0
+    enriched = spark.read.parquet(os.path.join(out, "transaction_enriched"))
+    assert enriched.count() == quiet.count()
+
+
+def test_overwrite_leaves_other_batches_and_compactions_untouched(
+    spark, fraud_data, tmp_path
+):
+    from realtime_fraud_detection_spark.streaming.sinks import compact_sink_batches
+
+    out = str(tmp_path / "out")
+    write = multi_sink_writer(out)
+    batch = _scored(fraud_data)
+    parts = [batch.filter(F.abs(F.hash("user_id")) % 3 == i) for i in range(3)]
+    write(parts[0], 0)
+    write(parts[1], 1)
+    compact_sink_batches(spark, out, "transaction_enriched", max_batch_id=0)
+    write(parts[2], 2)
+    path = os.path.join(out, "transaction_enriched")
+    before = {d: _files(os.path.join(path, d)) for d in ("batch_id=-1", "batch_id=2")}
+    assert all(before.values())
+
+    write(parts[1], 1)  # replay of batch 1
+    after = {d: _files(os.path.join(path, d)) for d in ("batch_id=-1", "batch_id=2")}
+    assert after == before
+    assert spark.read.parquet(path).count() == batch.count()

@@ -64,6 +64,41 @@ def test_streaming_scoring_pipeline_multi_sink(spark, fraud_data, tx_dir, tmp_pa
     assert feats.count() == tx.count()
 
 
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _listeners(spark) -> int:
+    return len(spark._jsparkSession.streams().listListeners())
+
+
+def test_scoring_pipeline_releases_profile_cache(spark, fraud_data, tx_dir, tmp_path):
+    """The profile snapshot a scoring query caches, and the listener that
+    releases it, are gone once the query stops; the stream still equals
+    batch scoring."""
+    import time
+
+    users, merchants, tx = fraud_data
+    for df in fraud_data:
+        df.count()  # materialize the fixture's own caches first
+    before = (_persistent_rdds(spark), _listeners(spark))
+    stream = spark.readStream.schema(tx.schema).option("maxFilesPerTrigger", 1).parquet(tx_dir)
+    out_dir = str(tmp_path / "out")
+    q = SP.run_scoring_pipeline(stream, users, merchants, out_dir, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    q.stop()
+    deadline = time.time() + 30  # the release runs on the listener bus
+    while (_persistent_rdds(spark), _listeners(spark)) != before and time.time() < deadline:
+        time.sleep(0.1)
+    assert (_persistent_rdds(spark), _listeners(spark)) == before
+
+    cols = ["transaction_id", "model_score", "decision", "risk_level"]
+    got = spark.read.parquet(os.path.join(out_dir, "transaction_enriched")).select(*cols)
+    want = P.score_transactions(tx, users, merchants).select(*cols)
+    assert got.count() == want.count() == tx.count()
+    assert got.exceptAll(want).count() == 0
+
+
 def test_streaming_session_windows_match_batch(spark, fraud_data, tx_dir, tmp_path):
     users, merchants, tx = fraud_data
     stream = spark.readStream.schema(tx.schema).parquet(tx_dir)
